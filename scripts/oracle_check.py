@@ -7,6 +7,8 @@ Runs each oracle SQL from <verifyOutDir>/oracle_sql.json in DuckDB over
 the sfDir parquet tables and compares rows/schema/values against the
 Spark parquet dumps in <verifyOutDir>/<query>/. Columns are sorted by
 name and rows by all columns before the value compare, like the driver.
+A query with no Spark dump (Verify writes none when the query fails) is
+skipped, or counted as a failure when it was named on the command line.
 """
 import duckdb
 import glob
@@ -32,12 +34,21 @@ def main() -> int:
         name = os.path.basename(t).replace(".parquet", "")
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{t}')")
     failures = 0
+    for name in sorted(only - sqls.keys()):
+        print(f"{name}: FAILED (no oracle SQL)")
+        failures += 1
     for name, sql in sorted(sqls.items()):
         if only and name not in only:
             continue
         spark_glob = os.path.join(outdir, name, "*.parquet")
         if not glob.glob(spark_glob):
-            print(f"{name}: SKIP (no spark dump)")
+            # Verify writes no dump for a query that failed; a query
+            # named on the command line must not pass unchecked
+            if name in only:
+                print(f"{name}: FAILED (no spark dump)")
+                failures += 1
+            else:
+                print(f"{name}: SKIP (no spark dump)")
             continue
         spark = canon(con.execute(
             f"SELECT * FROM read_parquet('{spark_glob}')").df())

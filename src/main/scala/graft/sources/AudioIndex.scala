@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Audio
-import graft.queries.Tables
 
 /** Persisted audio LANDMARK index — the constellation family's
   * cross-JOB posting table, completing the live-gate symmetry: like
@@ -32,7 +31,8 @@ import graft.queries.Tables
   * on both sides). `EstateLifecycleSpec` drives all four modalities
   * through add → sweep → compact → expire → sweep == from-scratch.
   */
-object AudioIndex {
+object AudioIndex extends SnapshotIndex(family = "audio", keys = Seq("slot", "lmv"),
+    payload = Seq("rep", "fp", "slot", "lmv"), snapshotsLog = "audio_snapshots") {
 
   /** Write a snapshot's landmark posting index. One co-locating
     * shuffle per snapshot, ever.
@@ -48,56 +48,29 @@ object AudioIndex {
     */
   def writeFps(fps: DataFrame, table: String, buckets: Int = 8,
       mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite)
-      TableUtil.dropTableAndLocation(fps.sparkSession, table)
-    val reps = fps.groupBy(col("fp")).agg(min(col("asset_id")).as("rep"))
-    reps
+    val rows = fps.groupBy(col("fp")).agg(min(col("asset_id")).as("rep"))
       .select(col("rep"), col("fp"), explode(sequence(lit(0), lit(6))).as("slot"))
       .withColumn("lmv", expr("shiftright(fp, 9 * slot) % 512"))
-      .repartition(buckets, col("slot"), col("lmv"))
-      .write
-      .mode(mode)
-      .bucketBy(buckets, "slot", "lmv")
-      .sortBy("slot", "lmv")
-      .format("parquet")
-      .saveAsTable(table)
+    save(colocate(rows, buckets), table, buckets, mode)
   }
 
-  /** COMPACTION: merge N snapshot indexes into one estate index table.
-    * Like the phash index (and unlike the signature index), audio
-    * posting rows are fp-GROUP facts — one representative per distinct
-    * fingerprint per snapshot — and the same fingerprint can hold a
-    * representative in several snapshots (a re-crawled identical
-    * track), so the merge RE-COLLAPSES: group by (fp, slot, lmv), keep
-    * the global minimum representative. The result is bit-identical to
-    * [[writeFps]] over the union of the snapshots' fingerprints
-    * (IndexMergeSpec pins it) with no re-sampling: landmark rows are a
-    * function of the fingerprint, so the stored rows already carry
-    * them. One aggregation riding the ONE co-locating bucket shuffle.
+  /** COMPACTION's re-collapse ([[merge]]): like the phash index (and
+    * unlike the signature index), audio posting rows are fp-GROUP facts
+    * — one representative per distinct fingerprint per snapshot — and
+    * the same fingerprint can hold a representative in several
+    * snapshots (a re-crawled identical track), so the merge groups by
+    * (fp, slot, lmv) and keeps the global minimum representative. The
+    * result is bit-identical to [[writeFps]] over the union of the
+    * snapshots' fingerprints (IndexMergeSpec pins it) with no
+    * re-sampling: landmark rows are a function of the fingerprint, so
+    * the stored rows already carry them. The aggregation (group keys a
+    * superset of the partition keys) rides the co-locating bucket
+    * shuffle.
     */
-  def merge(spark: SparkSession, inputs: Seq[String], out: String,
-      buckets: Int = 8): Unit = {
-    TableUtil.dropTableAndLocation(spark, out)
-    // rawTable (not spark.table) is load-bearing: a union of
-    // identically-bucketed SCANS claims a partitioning the union does
-    // not honor and the re-collapse would emit duplicate keys — see
-    // TableUtil.rawTable's docstring. The explicit repartition is the
-    // one compaction shuffle; the re-collapse (group keys a superset
-    // of the partition keys) and the bucketed write both ride it.
-    inputs.map(TableUtil.rawTable(spark, _)
-        .select(col("rep"), col("fp"), col("slot"), col("lmv")))
-      .reduce(_.unionByName(_))
-      .repartition(buckets, col("slot"), col("lmv"))
-      .groupBy(col("fp"), col("slot"), col("lmv"))
+  override protected def recollapse(rows: DataFrame): DataFrame =
+    rows.groupBy(col("fp"), col("slot"), col("lmv"))
       .agg(min(col("rep")).as("rep"))
       .select(col("rep"), col("fp"), col("slot"), col("lmv"))
-      .write
-      .mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "slot", "lmv")
-      .sortBy("slot", "lmv")
-      .format("parquet")
-      .saveAsTable(out)
-  }
 
   /** RETENTION: expire one snapshot from a compacted estate. The naive
     * anti join (the signature index's retention) is LOSSY here because
@@ -131,53 +104,33 @@ object AudioIndex {
     * fingerprints (EstateLifecycleSpec pins the composition).
     */
   def removeSnapshot(spark: SparkSession, estate: String, removed: String,
-      survivors: Seq[String], out: String, buckets: Int = 8): Unit = {
-    TableUtil.dropTableAndLocation(spark, out)
-    // join keys (slot, lmv, fp) are a superset of the bucket keys: the
-    // SignatureIndex.removeSnapshot subset-co-partition scoping
-    val key = "spark.sql.requireAllClusterKeysForCoPartition"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
-      val keys = Seq("slot", "lmv", "fp")
-      val tomb = spark.table(removed)
-        .select(col("slot"), col("lmv"), col("fp"), lit(true).as("tomb"))
+      survivors: Seq[String], out: String, buckets: Int = 8): Unit =
+    expire(spark, out, buckets) {
       // no survivors = retiring the estate's last snapshot: nothing to
       // repair, the plain anti join (an empty index when the estate
       // held only the removed snapshot) is exact
-      val retained =
-        if (survivors.isEmpty)
-          spark.table(estate)
-            .join(tomb.select(col("slot"), col("lmv"), col("fp")), keys, "left_anti")
-            .select(col("rep"), col("fp"), col("slot"), col("lmv"))
-        else {
-          val shared = survivors.map(s => spark.table(s)
-              .select(col("slot"), col("lmv"), col("fp"), col("rep"))
-              .join(spark.table(removed).select(col("slot"), col("lmv"), col("fp")),
-                keys, "left_semi"))
-            .reduce(_.unionByName(_))
-          val repair =
-            if (survivors.sizeIs == 1) shared.withColumnRenamed("rep", "srep")
-            else shared.groupBy(col("slot"), col("lmv"), col("fp"))
-              .agg(min(col("rep")).as("srep"))
-          spark.table(estate)
-            .join(tomb, keys, "left")
-            .join(repair, keys, "left")
-            .filter(col("tomb").isNull || col("srep").isNotNull)
-            .select(when(col("tomb").isNull, col("rep")).otherwise(col("srep")).as("rep"),
-              col("fp"), col("slot"), col("lmv"))
-        }
-      retained.write
-        .mode(SaveMode.Overwrite)
-        .bucketBy(buckets, "slot", "lmv")
-        .sortBy("slot", "lmv")
-        .format("parquet")
-        .saveAsTable(out)
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+      if (survivors.isEmpty) antiJoin(spark, estate, removed, "fp")
+      else {
+        val keys = Seq("slot", "lmv", "fp")
+        val tomb = spark.table(removed)
+          .select(col("slot"), col("lmv"), col("fp"), lit(true).as("tomb"))
+        val shared = survivors.map(s => spark.table(s)
+            .select(col("slot"), col("lmv"), col("fp"), col("rep"))
+            .join(spark.table(removed).select(col("slot"), col("lmv"), col("fp")),
+              keys, "left_semi"))
+          .reduce(_.unionByName(_))
+        val repair =
+          if (survivors.sizeIs == 1) shared.withColumnRenamed("rep", "srep")
+          else shared.groupBy(col("slot"), col("lmv"), col("fp"))
+            .agg(min(col("rep")).as("srep"))
+        spark.table(estate)
+          .join(tomb, keys, "left")
+          .join(repair, keys, "left")
+          .filter(col("tomb").isNull || col("srep").isNotNull)
+          .select(when(col("tomb").isNull, col("rep")).otherwise(col("srep")).as("rep"),
+            col("fp"), col("slot"), col("lmv"))
+      }
     }
-  }
 
   /** Pair-level cross-snapshot matches — every (B rep, A rep) landmark
     * candidate at ≥ [[Audio.MinLandmarkAgree]]/7 aligned agreement, one
@@ -185,33 +138,22 @@ object AudioIndex {
     * lmv) bucket exceeding [[Audio.AudioBucketCap]] representatives on
     * EITHER side is a saturated stop-landmark and drops before the
     * join (declared semantics, mirrored in the oracle; non-binding on
-    * the gate corpus). Both cap counts group by the bucket key, so
-    * they read the bucket files exchange-free; the candidate join
-    * between the two identically-bucketed tables plans no exchange on
-    * either side; agreement verifies MAP-SIDE from the two packed
-    * fingerprints in the join's own projection.
+    * the gate corpus). Agreement verifies MAP-SIDE from the two
+    * packed fingerprints in the join's own projection.
     */
   def crossSnapshotPairs(spark: SparkSession, indexA: String, indexB: String): DataFrame =
     crossSnapshotPairsCapped(spark, indexA, indexB, Audio.AudioBucketCap)
 
   /** [[crossSnapshotPairs]] with an explicit cap — the spec seam. */
   private[graft] def crossSnapshotPairsCapped(spark: SparkSession, indexA: String,
-      indexB: String, cap: Long): DataFrame = {
-    def cool(table: String) = spark.table(table)
-      .groupBy(col("slot"), col("lmv")).agg(count(lit(1)).as("c"))
-      .filter(col("c") <= cap).select(col("slot"), col("lmv"))
-    val keep = cool(indexA).join(cool(indexB), Seq("slot", "lmv"), "left_semi")
-    val a = spark.table(indexA)
-      .select(col("slot"), col("lmv"), col("rep").as("corpus_rep"), col("fp").as("fp_c"))
-    val b = spark.table(indexB)
-      .select(col("slot"), col("lmv"), col("rep"), col("fp"))
-    b.join(broadcast(keep), Seq("slot", "lmv"), "left_semi")
-      .join(a, Seq("slot", "lmv"))
+      indexB: String, cap: Long): DataFrame =
+    cappedCandidates(spark, indexA, indexB, cap,
+        a = Seq(col("rep").as("corpus_rep"), col("fp").as("fp_c")),
+        b = Seq(col("rep"), col("fp")))
       .select(col("rep"), col("corpus_rep"),
         expr(Audio.agreeSql("fp", "fp_c")).as("n_agree"))
       .filter(col("n_agree") >= Audio.MinLandmarkAgree)
       .distinct() // a pair agreeing in several slots emits once
-  }
 
   /** Cross-snapshot audio near-dup verdicts: every representative of
     * snapshot B with a majority-agreement match in snapshot A, with
@@ -219,42 +161,19 @@ object AudioIndex {
     * tie-break) — the [[SignatureIndex.crossSnapshotMatches]] verdict
     * shape for the audio modality.
     */
-  def crossSnapshotMatches(spark: SparkSession, indexA: String, indexB: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val matches = crossSnapshotPairs(spark, indexA, indexB)
-    val w = Window.partitionBy(col("rep"))
-      .orderBy(col("n_agree").desc, col("corpus_rep").asc)
-    matches
-      .withColumn("rk", row_number().over(w))
-      .groupBy(col("rep"))
-      .agg(count(lit(1)).as("n_matches"),
-        min(when(col("rk") === 1, col("corpus_rep"))).as("dup_of"),
-        min(when(col("rk") === 1, col("n_agree"))).as("best_agree"))
+  def crossSnapshotMatches(spark: SparkSession, indexA: String, indexB: String): DataFrame =
+    bestMatches(crossSnapshotPairs(spark, indexA, indexB), id = "rep",
+      corpus = "corpus_rep", score = "n_agree", best = "best_agree", highest = true)
+
+  /** Lanes derive from the memoized corpus fingerprints — one sampling
+    * pass per dataset ever, shared with the pair and recall queries.
+    */
+  override protected def writeLanes(spark: SparkSession, sfDir: String, ta: String,
+      tb: String): Unit = {
+    val fps = Audio.corpusFps(spark, sfDir)
+    writeFps(fps.filter(col("asset_id") % 2 === 0), ta)
+    writeFps(fps.filter(col("asset_id") % 2 === 1), tb)
   }
-
-  private val snapshotTablesMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
-  private[graft] def snapshotTables(spark: SparkSession, sfDir: String): (String, String) =
-    snapshotTablesMemo.synchronized {
-      snapshotTablesMemo.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}|$sfDir",
-        graft.core.Memo.timed("audio_snapshots", sfDir) {
-          // lanes derive from the memoized corpus fingerprints — one
-          // sampling pass per dataset ever, shared with the pair and
-          // recall queries
-          val fps = Audio.corpusFps(spark, sfDir)
-          val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-          val (ta, tb) = (s"graft_audio_snap_a_$sfx", s"graft_audio_snap_b_$sfx")
-          writeFps(fps.filter(col("asset_id") % 2 === 0), ta)
-          writeFps(fps.filter(col("asset_id") % 2 === 1), tb)
-          (ta, tb)
-        })
-    }
-
-  /** Test seam: forget the written snapshot tables. */
-  private[graft] def resetSnapshotTables(): Unit =
-    snapshotTablesMemo.synchronized(snapshotTablesMemo.clear())
 
   /** The live audio gate: each arriving track's 7 posting rows probe
     * the bucketed index; strict-majority agreement verifies map-side
@@ -535,30 +454,6 @@ object AudioIndex {
 
   // ---- q_audio_estate_merge ------------------------------------------------
 
-  private val estateTableMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** The COMPACTED estate index of a dataset: snapshots A and B merged
-    * by [[merge]] into one bucketed table, written once per
-    * (application, dataset) and timed into the bench `artifacts` map.
-    */
-  private[graft] def estateTable(spark: SparkSession, sfDir: String): String =
-    estateTableMemo.synchronized {
-      estateTableMemo.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}|$sfDir",
-        graft.core.Memo.timed("audio_estate", sfDir) {
-          val (ta, tb) = snapshotTables(spark, sfDir)
-          val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-          val t = s"graft_audio_estate_$sfx"
-          merge(spark, Seq(ta, tb), t)
-          t
-        })
-    }
-
-  /** Test seam ([[resetSnapshotTables]]' contract). */
-  private[graft] def resetEstateTable(): Unit =
-    estateTableMemo.synchronized(estateTableMemo.clear())
-
   /** q_audio_estate_merge: the compacted estate's fingerprint-group
     * table — one row per distinct fingerprint with its GLOBAL
     * representative, read straight off the merged table's slot-0 lane
@@ -586,32 +481,6 @@ object AudioIndex {
 
   // ---- q_audio_retention ---------------------------------------------------
 
-  private val retainedTableMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** The estate AFTER snapshot B expires: [[removeSnapshot]] applied to
-    * the compacted estate with B's own index as the tombstone and A's
-    * as the repair source — written once per (application, dataset),
-    * timed into the bench `artifacts` map.
-    */
-  private[graft] def retainedTable(spark: SparkSession, sfDir: String): String =
-    retainedTableMemo.synchronized {
-      retainedTableMemo.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}|$sfDir",
-        graft.core.Memo.timed("audio_retained", sfDir) {
-          val (ta, tb) = snapshotTables(spark, sfDir)
-          val est = estateTable(spark, sfDir)
-          val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-          val t = s"graft_audio_retained_$sfx"
-          removeSnapshot(spark, est, tb, Seq(ta), t)
-          t
-        })
-    }
-
-  /** Test seam ([[resetSnapshotTables]]' contract). */
-  private[graft] def resetRetainedTable(): Unit =
-    retainedTableMemo.synchronized(retainedTableMemo.clear())
-
   /** q_audio_retention: the audio estate's DELETE leg, gated — crawl B
     * expires from the compacted estate via the subtract-and-repair
     * pass ([[removeSnapshot]]) and the survivor index's landmark band
@@ -625,7 +494,8 @@ object AudioIndex {
     * with A's.
     */
   def audioRetention(spark: SparkSession, sfDir: String): DataFrame =
-    bandStatsOf(spark.table(retainedTable(spark, sfDir)))
+    bandStatsOf(spark.table(retainedTable(spark, sfDir)(
+      (estate, laneA, laneB, out) => removeSnapshot(spark, estate, laneB, Seq(laneA), out))))
 
   /** The `q_audio_band_stats` readout over any persisted landmark
     * index — rows are already rep-collapsed postings, so the stats

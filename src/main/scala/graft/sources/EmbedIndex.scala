@@ -33,7 +33,8 @@ import graft.queries.Tables
   * admission gate: live vectors assign against the frozen codebook
   * and probe only their cell's bucket files).
   */
-object EmbedIndex {
+object EmbedIndex extends SnapshotIndex(family = "embed", keys = Seq("cell"),
+    payload = Seq("vec_id", "cell", "d2", "embedding", "nsq"), snapshotsLog = "embed_snapshots") {
 
   /** Cosine bar for a semantic duplicate — [[Similarity
     * .SemDedupThreshold]], so cross-snapshot verdicts are comparable
@@ -50,8 +51,6 @@ object EmbedIndex {
     */
   def write(emb: DataFrame, table: String, centers: IndexedSeq[Array[Double]],
       buckets: Int = 8, mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite)
-      TableUtil.dropTableAndLocation(emb.sparkSession, table)
     val assigned = emb
       .select(col("vec_id"), col("embedding"),
         Similarity.dot(col("embedding"), col("embedding")).as("nsq"))
@@ -60,63 +59,34 @@ object EmbedIndex {
           .nearestCenter(col("embedding"), 0, centers.head.length, centers))
       .select(col("vec_id"), col("best.code").as("cell"),
         col("best.d2").as("d2"), col("embedding"), col("nsq"))
-    writeRanked(assigned, table, buckets, mode)
+    // co-locate BEFORE the rank window, so the window and the bucketed
+    // write both ride the one shuffle
+    save(recollapse(colocate(assigned, buckets)), table, buckets, mode)
   }
 
-  /** Rank + bucket + write an assigned `(vec_id, cell, d2, embedding,
-    * nsq)` relation — the shared tail of [[write]] and [[merge]].
+  /** The per-cell rank of co-located `(vec_id, cell, d2, embedding,
+    * nsq)` rows — the shared tail of [[write]], COMPACTION's
+    * re-collapse ([[merge]]) and [[removeSnapshot]]. A merge needs no
+    * re-assignment and no distance recomputation: every input row
+    * already carries its cell and stored `d2` under the SAME frozen
+    * codebook, so the merge costs writing the estate index from
+    * scratch MINUS the assignment pass over every historical vector.
+    * The result is bit-identical to [[write]] over the union of the
+    * snapshots' vectors (IndexMergeSpec pins it): rank order (d2 asc,
+    * vec_id asc) is a global property of the frozen assignment, so
+    * interleaving snapshots cannot perturb it.
     */
-  private def writeRanked(assigned: DataFrame, table: String, buckets: Int,
-      mode: SaveMode): Unit = {
+  override protected def recollapse(rows: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("cell")).orderBy(col("d2").asc, col("vec_id").asc)
-    // co-locate BEFORE the window, and let the window and the bucketed
-    // write both ride the one shuffle. Ordering the repartition first
-    // is also load-bearing for [[merge]]: a union of identically-
-    // bucketed scans satisfies per-CHILD clustering, and Spark 4.1 will
-    // otherwise run a clustering-requiring operator straight over the
-    // Union with no exchange — same-cell rows from different snapshots
-    // never meet (the PhashIndex.merge aggregate hit exactly this;
-    // IndexMergeSpec pins both).
-    assigned
-      .repartition(buckets, col("cell"))
+    rows
       .withColumn("rk", row_number().over(w))
       .select(col("vec_id"), col("cell"), col("rk"), col("d2"),
         col("embedding"), col("nsq"))
-      .write
-      .mode(mode)
-      .bucketBy(buckets, "cell")
-      .sortBy("cell")
-      .format("parquet")
-      .saveAsTable(table)
-  }
-
-  /** COMPACTION: merge N snapshot indexes (all written by [[write]]
-    * under the SAME frozen codebook) into one estate index table. No
-    * re-assignment and no distance recomputation — every input row
-    * already carries its cell and stored `d2`, so the merge is a union
-    * plus ONE co-locating shuffle (shared by the per-cell re-rank and
-    * the bucket write), exactly the cost of writing the estate index
-    * from scratch MINUS the assignment pass over every historical
-    * vector. The result is bit-identical to [[write]] over the union
-    * of the snapshots' vectors (IndexMergeSpec pins it): rank order
-    * (d2 asc, vec_id asc) is a global property of the frozen
-    * assignment, so interleaving snapshots cannot perturb it.
-    */
-  def merge(spark: SparkSession, inputs: Seq[String], out: String,
-      buckets: Int = 8): Unit = {
-    TableUtil.dropTableAndLocation(spark, out)
-    // rawTable: see its docstring — the rank window over a union of
-    // bucketed scans would inherit a partitioning claim the union does
-    // not honor and rank each snapshot's cells separately
-    val union = inputs.map(TableUtil.rawTable(spark, _)
-        .select(col("vec_id"), col("cell"), col("d2"), col("embedding"), col("nsq")))
-      .reduce(_.unionByName(_))
-    writeRanked(union, out, buckets, SaveMode.Overwrite)
   }
 
   /** RETENTION: delete one snapshot's vectors from a compacted estate
     * index without re-assignment. Index rows are per-vector facts, so
-    * removal is a LEFT ANTI join on (cell, vec_id) between two
+    * removal is the core's anti join on (cell, vec_id) between two
     * identically-bucketed tables — exchange-free on both sides — and
     * the per-cell re-rank (ranks must close the gaps the deletions
     * open, or `rk <= KnnCellCap` would silently shrink the prototypical
@@ -126,36 +96,8 @@ object EmbedIndex {
     * exists for. Net: expiring a crawl re-shuffles nothing.
     */
   def removeSnapshot(spark: SparkSession, estate: String, removed: String,
-      out: String, buckets: Int = 8): Unit = {
-    TableUtil.dropTableAndLocation(spark, out)
-    // (cell, vec_id) is a superset of the bucket key — scope the
-    // subset-co-partition setting exactly like
-    // [[SignatureIndex.removeSnapshot]] (see the comment there), so the
-    // anti join AND the re-rank window both ride the stored bucketing
-    val key = "spark.sql.requireAllClusterKeysForCoPartition"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
-      val e = spark.table(estate)
-        .select(col("vec_id"), col("cell"), col("d2"), col("embedding"), col("nsq"))
-      val r = spark.table(removed).select(col("cell"), col("vec_id"))
-      val kept = e.join(r, Seq("cell", "vec_id"), "left_anti")
-      val w = Window.partitionBy(col("cell")).orderBy(col("d2").asc, col("vec_id").asc)
-      kept
-        .withColumn("rk", row_number().over(w))
-        .select(col("vec_id"), col("cell"), col("rk"), col("d2"),
-          col("embedding"), col("nsq"))
-        .write
-        .mode(SaveMode.Overwrite)
-        .bucketBy(buckets, "cell")
-        .sortBy("cell")
-        .format("parquet")
-        .saveAsTable(out)
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+      out: String, buckets: Int = 8): Unit =
+    expire(spark, out, buckets)(recollapse(antiJoin(spark, estate, removed, "vec_id")))
 
   private def cosCol(nsqA: Column, nsqB: Column, embA: Column, embB: Column): Column =
     round(Similarity.dot(embA, embB) / sqrt(nsqA * nsqB), 6)
@@ -188,16 +130,9 @@ object EmbedIndex {
     * either side; only the per-B-vec verdict window shuffles, keyed on
     * the match-bounded B ids.
     */
-  def crossSnapshotMatches(spark: SparkSession, indexA: String, indexB: String): DataFrame = {
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("corpus_vec").asc)
-    crossSnapshotPairs(spark, indexA, indexB)
-      .withColumn("rk", row_number().over(w))
-      .groupBy(col("vec_id"))
-      .agg(count(lit(1)).as("n_matches"),
-        min(when(col("rk") === 1, col("corpus_vec"))).as("dup_of"),
-        min(when(col("rk") === 1, col("cos"))).as("best_cos"))
-  }
+  def crossSnapshotMatches(spark: SparkSession, indexA: String, indexB: String): DataFrame =
+    bestMatches(crossSnapshotPairs(spark, indexA, indexB), id = "vec_id",
+      corpus = "corpus_vec", score = "cos", best = "best_cos", highest = true)
 
   /** Stream-static ingest gate against the persisted index: each
     * in-flight vector assigns to its estate cell (literal-codebook
@@ -227,31 +162,17 @@ object EmbedIndex {
 
   // ---- q_cross_snapshot_embed --------------------------------------------
 
-  private val snapshotTablesMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
   /** The two persisted snapshot indexes of a dataset (A = even vec
     * ids, the estate; B = odd, the new batch), both written under the
-    * A-side fit — the [[SignatureIndex.snapshotTables]] contract.
+    * A-side fit.
     */
-  private[graft] def snapshotTables(spark: SparkSession, sfDir: String): (String, String) =
-    snapshotTablesMemo.synchronized {
-      snapshotTablesMemo.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}|$sfDir",
-        graft.core.Memo.timed("embed_snapshots", sfDir) {
-          val emb = Tables.embeddings(spark, sfDir)
-          val centers = Similarity.estateCenters(spark, sfDir)
-          val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-          val (ta, tb) = (s"graft_embed_snap_a_$sfx", s"graft_embed_snap_b_$sfx")
-          write(emb.filter(col("vec_id") % 2 === 0), ta, centers)
-          write(emb.filter(col("vec_id") % 2 === 1), tb, centers)
-          (ta, tb)
-        })
-    }
-
-  /** Test seam ([[SignatureIndex.resetSnapshotTables]]' contract). */
-  private[graft] def resetSnapshotTables(): Unit =
-    snapshotTablesMemo.synchronized(snapshotTablesMemo.clear())
+  override protected def writeLanes(spark: SparkSession, sfDir: String, ta: String,
+      tb: String): Unit = {
+    val emb = Tables.embeddings(spark, sfDir)
+    val centers = Similarity.estateCenters(spark, sfDir)
+    write(emb.filter(col("vec_id") % 2 === 0), ta, centers)
+    write(emb.filter(col("vec_id") % 2 === 1), tb, centers)
+  }
 
   /** q_cross_snapshot_embed: the registered cross-snapshot SEMANTIC
     * sweep — the third modality's estate query beside
@@ -416,30 +337,6 @@ object EmbedIndex {
 
   // ---- q_embed_index_stats -------------------------------------------------
 
-  private val estateTableMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** The COMPACTED estate index of a dataset: snapshots A and B merged
-    * by [[merge]] into one bucketed table, written once per
-    * (application, dataset) and timed into the bench `artifacts` map.
-    */
-  private[graft] def estateTable(spark: SparkSession, sfDir: String): String =
-    estateTableMemo.synchronized {
-      estateTableMemo.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}|$sfDir",
-        graft.core.Memo.timed("embed_estate", sfDir) {
-          val (ta, tb) = snapshotTables(spark, sfDir)
-          val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-          val t = s"graft_embed_estate_$sfx"
-          merge(spark, Seq(ta, tb), t)
-          t
-        })
-    }
-
-  /** Test seam ([[resetSnapshotTables]]' contract). */
-  private[graft] def resetEstateTable(): Unit =
-    estateTableMemo.synchronized(estateTableMemo.clear())
-
   /** q_embed_index_stats: health readout of the COMPACTED estate index
     * — per cell, the posting-list size, the rk-capped prototypical
     * core a consumer actually joins ([[Similarity.KnnCellCap]]), and
@@ -486,33 +383,6 @@ object EmbedIndex {
 
   // ---- q_embed_retention ---------------------------------------------------
 
-  private val retainedTableMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** The estate AFTER snapshot B expires ([[SignatureIndex
-    * .retainedTable]]'s contract on the vector side): [[removeSnapshot]]
-    * applied to the compacted estate with B's index as the tombstone,
-    * written once per (application, dataset), timed into the bench
-    * `artifacts` map.
-    */
-  private[graft] def retainedTable(spark: SparkSession, sfDir: String): String =
-    retainedTableMemo.synchronized {
-      retainedTableMemo.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}|$sfDir",
-        graft.core.Memo.timed("embed_retained", sfDir) {
-          val (_, tb) = snapshotTables(spark, sfDir)
-          val est = estateTable(spark, sfDir)
-          val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-          val t = s"graft_embed_retained_$sfx"
-          removeSnapshot(spark, est, tb, t)
-          t
-        })
-    }
-
-  /** Test seam ([[resetSnapshotTables]]' contract). */
-  private[graft] def resetRetainedTable(): Unit =
-    retainedTableMemo.synchronized(retainedTableMemo.clear())
-
   /** q_embed_retention: the vector side of the estate's DELETE leg,
     * gated — snapshot B expires via the zero-exchange anti join + gap-
     * closing re-rank, and the survivor index's per-cell stats must
@@ -521,7 +391,8 @@ object EmbedIndex {
     * hash-mismatches.
     */
   def embedRetention(spark: SparkSession, sfDir: String): DataFrame =
-    cellStatsOf(spark.table(retainedTable(spark, sfDir)))
+    cellStatsOf(spark.table(retainedTable(spark, sfDir)(
+      (estate, _, laneB, out) => removeSnapshot(spark, estate, laneB, out))))
 
   /** DuckDB oracle (post-fit): per-cell re-rank of the survivors. */
   def embedRetentionOracleSql: Option[String] =

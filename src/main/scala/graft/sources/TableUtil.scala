@@ -77,7 +77,7 @@ private[graft] object TableUtil {
   private val hotBucketsMemo = new graft.core.Memo("gate_hot_buckets", maxEntries = 8)
 
   /** Test seam: forget memoized hot sets (a spec that rewrites an
-    * index table in place must reset — the `resetSnapshotTables`
+    * index table in place must reset — the `SnapshotIndex.resetTables`
     * contract).
     */
   private[graft] def resetHotBuckets(): Unit = hotBucketsMemo.clear()

@@ -167,7 +167,7 @@ class Round10OpsSpec extends SparkSpec {
   test("incremental phash clusters: the image snapshot merges through the same quotient") {
     import org.apache.spark.sql.functions._
     Multimodal.resetPhashMemo()
-    graft.sources.PhashIndex.resetSnapshotTables()
+    graft.sources.PhashIndex.resetTables()
     try {
       val dir = java.nio.file.Files.createTempDirectory("phinc10").toString
       def txt(base: String) = (1 to 40).map(i => s"$base$i").mkString(" ")
@@ -241,7 +241,7 @@ class Round10OpsSpec extends SparkSpec {
         s"planted layout diverged: $got")
     } finally {
       Multimodal.resetPhashMemo()
-      graft.sources.PhashIndex.resetSnapshotTables()
+      graft.sources.PhashIndex.resetTables()
       spark.catalog.clearCache()
     }
   }
@@ -266,7 +266,7 @@ class Round10OpsSpec extends SparkSpec {
   test("cross-snapshot recall eval: planted near-identical pair caught; invariants hold") {
     import org.apache.spark.sql.functions._
     Dedup.resetClusterMemo()
-    graft.sources.SignatureIndex.resetSnapshotTables()
+    graft.sources.SignatureIndex.resetTables()
     try {
       val dir = java.nio.file.Files.createTempDirectory("csr10").toString
       def txt(base: String, edit: Int = -1) =
@@ -296,7 +296,7 @@ class Round10OpsSpec extends SparkSpec {
         s"identical cross-parity pair must be caught at J = 1.0: ${got.toSeq}")
     } finally {
       Dedup.resetClusterMemo()
-      graft.sources.SignatureIndex.resetSnapshotTables()
+      graft.sources.SignatureIndex.resetTables()
       spark.catalog.clearCache()
     }
   }
@@ -304,7 +304,7 @@ class Round10OpsSpec extends SparkSpec {
   test("image sweep recall eval: planted identical cross-parity pair caught") {
     import org.apache.spark.sql.functions._
     Multimodal.resetPhashMemo()
-    graft.sources.PhashIndex.resetSnapshotTables()
+    graft.sources.PhashIndex.resetTables()
     try {
       val dir = java.nio.file.Files.createTempDirectory("psr10").toString
       val same = (1 to 80).map(i => ('a' + (i % 17)).toChar).mkString(" ")
@@ -324,7 +324,7 @@ class Round10OpsSpec extends SparkSpec {
       got.foreach { case (_, nt, nh, _) => assert(nh <= nt) }
     } finally {
       Multimodal.resetPhashMemo()
-      graft.sources.PhashIndex.resetSnapshotTables()
+      graft.sources.PhashIndex.resetTables()
       spark.catalog.clearCache()
     }
   }

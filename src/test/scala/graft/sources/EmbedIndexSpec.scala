@@ -114,7 +114,7 @@ class EmbedIndexSpec extends SparkSpec {
 
   test("registered estate queries: verdicts and full recall under the frozen estate codebook") {
     Similarity.resetEstateFits()
-    EmbedIndex.resetSnapshotTables()
+    EmbedIndex.resetTables()
     val dir = java.nio.file.Files.createTempDirectory("embest10").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -137,7 +137,7 @@ class EmbedIndexSpec extends SparkSpec {
         s"cell-scoped sweep must have full recall on the planted families: $rec")
     } finally {
       Similarity.resetEstateFits()
-      EmbedIndex.resetSnapshotTables()
+      EmbedIndex.resetTables()
       spark.sql(s"DROP TABLE IF EXISTS graft_embed_snap_a_${dir.replaceAll("[^A-Za-z0-9]+", "_")}")
       spark.sql(s"DROP TABLE IF EXISTS graft_embed_snap_b_${dir.replaceAll("[^A-Za-z0-9]+", "_")}")
       spark.catalog.clearCache()
@@ -146,7 +146,7 @@ class EmbedIndexSpec extends SparkSpec {
 
   test("embed incremental: quotient merge == from-scratch; families cluster whole") {
     Similarity.resetEstateFits()
-    EmbedIndex.resetSnapshotTables()
+    EmbedIndex.resetTables()
     Similarity.resetEmbedIncrementalMemos()
     val dir = java.nio.file.Files.createTempDirectory("embinc13").toString
     rows.toDF("vec_id", "embedding", "label")
@@ -174,7 +174,7 @@ class EmbedIndexSpec extends SparkSpec {
         "the from-scratch oracle must freeze once the estate fit has run")
     } finally {
       Similarity.resetEstateFits()
-      EmbedIndex.resetSnapshotTables()
+      EmbedIndex.resetTables()
       Similarity.resetEmbedIncrementalMemos()
       spark.sql(s"DROP TABLE IF EXISTS graft_embed_snap_a_${dir.replaceAll("[^A-Za-z0-9]+", "_")}")
       spark.sql(s"DROP TABLE IF EXISTS graft_embed_snap_b_${dir.replaceAll("[^A-Za-z0-9]+", "_")}")
