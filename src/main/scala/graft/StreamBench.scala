@@ -76,6 +76,8 @@ object StreamBench {
       anomalies += pipeline.processBatch(batch(tr), new Timestamp(t0 + (tr + 1) * 15000L)).count()
     }
     val sec = (System.nanoTime() - start) / 1e9
+    // release the run's store so the next run starts from an empty cache
+    pipeline.close()
     val msgs = perTrigger.toLong * triggers
     Result((msgs / sec).round, msgs, sec, anomalies,
       if (nTopics > 0) nTopics else 2, bucketed)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.Dsl
-import graft.functions.SchemaFlatten
+import graft.functions.{SchemaFlatten, TopicFields}
 
 /** Projection of wide event rows into the engine's long-format spine
   * `(topic, path, value, produced)` — the Spark analog of the reference's
@@ -83,17 +83,20 @@ object Extraction {
   /** Multi-topic long-format projection in ONE plan: instead of a
     * filter+union branch per topic (plan size O(topics) — a
     * plan-explosion at the reference's "every topic on the cluster"
-    * cardinality), the per-topic path sets become a broadcast
-    * (topic, path, json_path) dimension; messages join it on topic and
-    * the field is extracted from a VARIANT on the joined JSONPath. Each
-    * message is parsed ONCE (`try_parse_json` before the join, not once
-    * per extracted field); per-path extraction is a cheap binary
-    * traversal (`try_variant_get`), and malformed payloads yield a null
-    * variant whose extractions all fall to the F3 filter. Plan node
-    * count is independent of topic count; the inner join doubles as the
-    * F2 unconfigured-topic guard (reference: lib/dsl/DSLHandler.js:
-    * 127-131). The virtual `__topic_frequency` row (P6) rides the same
-    * dimension with a constant 1.0 value.
+    * cardinality), each message looks its topic's `(path, jsonPath)`
+    * list up in a table built once on the driver from `topicPaths`
+    * ([[TopicFields]]: one hash lookup per message, no join, no
+    * broadcast job, no hash relation for a cached store segment to
+    * pin) and the list is exploded to one row per tracked field. An
+    * unconfigured topic looks up NULL and yields no rows — the F2 guard
+    * (reference: lib/dsl/DSLHandler.js:127-131, a lookup in the
+    * in-process DSL map). Each message is parsed ONCE (`try_parse_json`
+    * before the explode, not once per extracted field); per-path
+    * extraction is a cheap binary traversal (`try_variant_get`), and
+    * malformed payloads yield a null variant whose extractions all fall
+    * to the F3 filter. Plan node count and per-message cost are
+    * independent of topic count. The virtual `__topic_frequency` row
+    * (P6) rides the same list with a constant 1.0 value.
     */
   def fromJsonMessagesMulti(
       df: DataFrame,
@@ -104,28 +107,34 @@ object Extraction {
       includeFrequency: Boolean = false,
       carry: Seq[(String, Column)] = Nil,
   ): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val dim = topicPaths.flatMap { case (t, ps) =>
-      val rows = ps.map(p => (t, p, SchemaFlatten.jsonPathOf(p)))
-      if (includeFrequency) rows :+ ((t, Dsl.FrequencyField, "$")) else rows
-    }.toDF("topic", "path", "__json_path")
+    val table = topicPaths.groupMapReduce(_._1)(_._2)(_ ++ _).map { case (t, ps) =>
+      val fields = ps.map(p => (p, SchemaFlatten.jsonPathOf(p)))
+      t -> (if (includeFrequency) fields :+ ((Dsl.FrequencyField, "$")) else fields)
+    }
     val carried = carry.map { case (n, c) => c.as(n) }
     df.select(
         Seq(topic.as("topic"), jsonValue.as("__json"), ts.as("produced")) ++ carried: _*
       )
       .filter(col("topic").isNotNull) // F1 malformed-message guard
-      .withColumn("__var", expr("try_parse_json(__json)")) // ONE parse per message
-      .join(broadcast(dim), Seq("topic")) // F2 unconfigured-topic guard
+      // ONE parse per message, below the explode: a generator's sibling
+      // expressions in the same select would run once per field
+      .withColumn("__var", expr("try_parse_json(__json)"))
       .select(
         Seq(
-          col("topic"), col("path"),
+          col("topic"), col("produced"), col("__var"),
+          // F2 unconfigured-topic guard: NULL fields explode to no rows
+          explode(TopicFields.lookup(col("topic"), table)).as("__f"),
+        ) ++ carry.map { case (n, _) => col(n) }: _*
+      )
+      .select(
+        Seq(
+          col("topic"), col("__f.path").as("path"),
           // extract as STRING then try_cast: a direct 'double' variant
           // cast would coerce JSON booleans to 1.0/0.0, diverging from
           // the batch path (get_json_object + try_cast -> null) and the
           // reference's numbers-only guard
-          when(col("path") === lit(Dsl.FrequencyField), lit(1.0))
-            .otherwise(expr("try_variant_get(__var, __json_path, 'string')").try_cast("double"))
+          when(col("__f.path") === lit(Dsl.FrequencyField), lit(1.0))
+            .otherwise(expr("try_variant_get(__var, __f.json_path, 'string')").try_cast("double"))
             .as("value"),
           col("produced"),
         ) ++ carry.map { case (n, _) => col(n) }: _*

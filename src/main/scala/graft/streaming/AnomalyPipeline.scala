@@ -68,7 +68,9 @@ class AnomalyPipeline(
     * retention horizon holds much more than a batch).
     */
   private final case class Segment(maxTsUs: Long, df: DataFrame, rows: Long, path: Option[String] = None) {
-    def release(): Unit = { df.unpersist(); path.foreach(AnomalyPipeline.deletePath(spark, _)) }
+    /** Drop the in-memory copy only; a persisted directory stays. */
+    def uncache(): Unit = AnomalyPipeline.uncache(df)
+    def release(): Unit = { uncache(); path.foreach(AnomalyPipeline.deletePath(spark, _)) }
   }
 
   /** Serializes store mutations (trigger thread) against the HTTP
@@ -181,21 +183,35 @@ class AnomalyPipeline(
           }
           orphans.foreach { st =>
             log.warn(s"removing uncommitted segment dir ${st.getPath} (crash leftover)")
-            try fsys.delete(st.getPath, true) catch { case _: Throwable => () }
+            try fsys.delete(st.getPath, true)
+            catch { case scala.util.control.NonFatal(e) => log.warn(s"could not remove ${st.getPath}: $e") }
           }
+          // an unreadable segment is skipped (its rows are lost to the
+          // stats, loudly); the rest of the store still restores
           val segs = live.flatMap { st =>
             st.getPath.getName.split('_') match {
               case Array("seg", ts, _*) =>
+                val p = st.getPath.toString
+                var df: Option[DataFrame] = None
                 try {
-                  val df = spark.read.parquet(st.getPath.toString).persist()
-                  Some(Segment(ts.toLong, df, df.count(), Some(st.getPath.toString)))
-                } catch { case _: Throwable => None }
+                  df = Some(spark.read.parquet(p).persist())
+                  Some(Segment(ts.toLong, df.get, df.get.count(), Some(p)))
+                } catch {
+                  case scala.util.control.NonFatal(e) =>
+                    log.warn(s"skipping unreadable store segment $p: $e")
+                    df.foreach(_.unpersist())
+                    None
+                }
               case _ => None
             }
           }
           if (segs.isEmpty) None else Some(segs.sortBy(_.maxTsUs))
         }
-      } catch { case _: Throwable => None }
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          log.warn(s"store restore from $d/store failed, starting empty: $e")
+          None
+      }
     }.getOrElse(Vector.empty)
   })
 
@@ -265,12 +281,19 @@ class AnomalyPipeline(
         // restore only keys the CURRENT DSL configures: a snapshot
         // written under an older, wider DSL must not carry stale keys
         // past the configured-cardinality bound below
-        try spark.read.parquet(s"$d/cooldown")
-          .collect()
-          .map(r => ((r.getString(0), r.getString(1), r.getLong(2)), r.getLong(3)))
-          .filter { case (k, _) => configuredKeys(k) }
-          .toMap
-        catch { case _: Throwable => Map.empty[(String, String, Long), Long] }
+        val p = new org.apache.hadoop.fs.Path(s"$d/cooldown")
+        try {
+          if (!hadoopFs(p).exists(p)) Map.empty[(String, String, Long), Long]
+          else spark.read.parquet(p.toString)
+            .collect()
+            .map(r => ((r.getString(0), r.getString(1), r.getLong(2)), r.getLong(3)))
+            .filter { case (k, _) => configuredKeys(k) }
+            .toMap
+        } catch {
+          case scala.util.control.NonFatal(e) =>
+            log.warn(s"cooldown restore from $p failed, starting with no suppression: $e")
+            Map.empty[(String, String, Long), Long]
+        }
       }.getOrElse(Map.empty)
     })
 
@@ -332,6 +355,15 @@ class AnomalyPipeline(
     segments.get().map(_.rows).sum
   }
 
+  /** Number of live store segments (bounded by retention / trigger
+    * interval, and by [[AnomalyPipeline.CompactSegments]] in exact mode).
+    */
+  def segmentCount: Int = storeLock.synchronized(segments.get().size)
+
+  /** The live segments' frames, for inspecting what they keep cached. */
+  private[streaming] def segmentFrames: Vector[DataFrame] =
+    storeLock.synchronized(segments.get().map(_.df))
+
   /** Stats-cache read-back, one row per (topic, path, window) with the
     * reference's {median, stdDev} value shape (the DSLHandler cache,
     * lib/dsl/DSLHandler.js:264-267). The snapshot is tiny
@@ -377,6 +409,19 @@ class AnomalyPipeline(
     }
   }
 
+  /** Release this pipeline's in-memory state once its query has
+    * stopped: the cached store segments, the stats snapshot and the
+    * bucket partials. The persisted `stateDir` (segment directories,
+    * manifest, cooldown) is left as it is, so a later pipeline on the
+    * same `stateDir` restores the same store. Idempotent; the pipeline
+    * must not process batches afterwards.
+    */
+  def close(): Unit = storeLock.synchronized {
+    segments.getAndSet(Vector.empty).foreach(_.uncache())
+    snapshot.getAndSet(None).foreach(AnomalyPipeline.uncache)
+    bucketState.getAndSet(None).foreach(AnomalyPipeline.uncache)
+  }
+
   /** One micro-batch step: returns the emitted anomalies.
     *
     * `batch` must be normalized messages: (topic, value: json string,
@@ -406,10 +451,11 @@ class AnomalyPipeline(
     counters.analysedMessages.add(batch.count())
 
     // 1. single-pass long-format projection: one plan regardless of
-    // topic count (broadcast (topic, path) dim -> get_json_object on the
-    // joined path), carrying the raw payload for originalMessage.
-    // Persisted for the batch: it feeds the detection join AND the store
-    // segment, so json extraction runs once.
+    // topic count (each message looks its topic's tracked paths up in a
+    // driver-built table and is parsed once; try_variant_get per path;
+    // no join), carrying the raw payload for originalMessage. Persisted
+    // for the batch: it feeds the detection join AND the store segment,
+    // so json extraction runs once.
     val extracted = Extraction.fromJsonMessagesMulti(
         batch, col("topic"), col("value"), col("ts"),
         dsl.topics.map(tc => tc.topic -> tc.fields.map(_.path)),
@@ -598,6 +644,19 @@ object AnomalyPipeline {
 
   /** Segment-count threshold that triggers store compaction. */
   val CompactSegments = 12
+
+  /** Drop a frame's in-memory blocks: its cache entry, or, for an
+    * eager `localCheckpoint` (the snapshot, the bucket partials, a
+    * compacted segment), the checkpointed RDD under it, which the cache
+    * manager does not track.
+    */
+  private[streaming] def uncache(df: DataFrame): Unit = {
+    df.unpersist()
+    df.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+  }
 
   /** Recursively delete one persisted-segment directory. */
   private[streaming] def deletePath(spark: SparkSession, p: String): Unit =

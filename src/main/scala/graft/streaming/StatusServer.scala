@@ -121,15 +121,17 @@ class StatusServer(
     s.createContext("/metrics", exchange => route(exchange) {
       case ("GET", _) =>
         // Prometheus text exposition (beyond the reference surface):
-        // counters as monotonic totals plus the stored-event gauge
+        // counters as monotonic totals plus state gauges
         val counterLines = counters.snapshot.toSeq.sortBy(_._1).flatMap { case (k, v) =>
           val name = "graft_" + k.replaceAll("([A-Z])", "_$1").toLowerCase + "_total"
           Seq(s"# TYPE $name counter", s"$name $v")
         }
-        val gauge = Seq(
-          "# TYPE graft_stored_events gauge",
-          s"graft_stored_events ${pipeline.map(_.storedEventCount).getOrElse(0L)}")
-        (200, (counterLines ++ gauge).mkString("", "\n", "\n"))
+        val gauges = Seq(
+          "graft_stored_events" -> pipeline.map(_.storedEventCount).getOrElse(0L),
+          "graft_store_segments" -> pipeline.map(_.segmentCount.toLong).getOrElse(0L),
+          "graft_storage_memory_bytes" -> storageMemoryBytes,
+        ).flatMap { case (name, v) => Seq(s"# TYPE $name gauge", s"$name $v") }
+        (200, (counterLines ++ gauges).mkString("", "\n", "\n"))
     })
     s.createContext("/anomalies/cooldown", exchange => route(exchange) {
       case ("GET", _) =>
@@ -149,6 +151,16 @@ class StatusServer(
   }
 
   def stop(): Unit = { server.foreach(_.stop(0)); server = None }
+
+  /** Block-manager storage memory in use across executors (and the
+    * driver): RDD and broadcast blocks alike, max − remaining per block
+    * manager. 0 when no Spark session is running.
+    */
+  private def storageMemoryBytes: Long =
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .map(_.sparkContext.getExecutorMemoryStatus.values.map { case (max, free) => max - free }.sum)
+      .getOrElse(0L)
 
   private def jsonObject(fields: Seq[String]): String = fields.mkString("{", ", ", "}")
   private def jsonArray(items: Seq[String]): String = items.mkString("[", ", ", "]")

@@ -60,6 +60,7 @@ object StreamDemo {
       query.processAllAvailable()
     }
     query.stop()
+    pipeline.close()
     println(s"[counters] ${pipeline.counters.snapshot.toSeq.sorted.mkString(", ")}")
     spark.stop()
   }

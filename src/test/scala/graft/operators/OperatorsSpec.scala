@@ -76,6 +76,40 @@ class ExtractionSpec extends SparkSpec {
       .collect().map(_.getDouble(2)).toSeq
     assert(single == Seq(2.5))
     assert(multi == single, "streaming extraction diverged from batch on boolean leaves")
+
+    // multi-topic output == the union of per-topic single-path outputs,
+    // as a multiset: unconfigured and null topics yield nothing, nested
+    // and array paths resolve alike, malformed JSON keeps only its
+    // __topic_frequency row
+    val t = ts("2024-01-01 00:00:00")
+    val wide = Seq[(String, String)](
+      ("t", """{"k":1.5,"sub":{"one":15.5},"arr":[7,8]}"""),
+      ("t", """{"k":true,"sub":{"one":"16.5"},"arr":[]}"""),
+      ("t", """{"sub":{"one":{"deep":1}},"arr":[9.25]}"""),
+      ("t", """{"k":2.5"""), // malformed
+      ("t", """{"k":2.5}"""), // duplicate row: multiset, not set
+      ("t", """{"k":2.5}"""),
+      ("u", """{"v":-3,"k":4.0}"""),
+      ("u", """not json at all"""),
+      ("x", """{"k":99.0,"v":99.0}"""), // unconfigured topic
+      (null, """{"k":42.0}"""), // null topic
+    ).toDF("topic", "payload").withColumn("ts", lit(t))
+    val topicPaths = Seq("t" -> Seq("k", "sub.one", "arr.0"), "u" -> Seq("v"))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select("topic", "path", "value", "produced").collect().toSeq
+        .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getTimestamp(3)))
+        .groupBy(identity).map { case (k, v) => k -> v.size }
+    val perTopic = topicPaths.map { case (tp, paths) =>
+      Extraction.fromJsonMessages(wide.filter(col("topic") === tp),
+        col("topic"), col("payload"), col("ts"), paths, includeFrequency = true)
+    }.reduce(_ union _)
+    val multiAll = Extraction.fromJsonMessagesMulti(
+      wide, col("topic"), col("payload"), col("ts"), topicPaths, includeFrequency = true)
+    val expected = rows(perTopic)
+    assert(expected.keySet.exists(_._2 == "arr.0") && expected.keySet.exists(_._2 == "sub.one"),
+      s"parity is vacuous for nested/array paths: $expected")
+    assert(expected.collect { case ((_, "__topic_frequency", _, _), n) => n }.sum == 8)
+    assert(rows(multiAll) == expected, "multi-topic extraction diverged from the per-topic union")
   }
 }
 

@@ -20,6 +20,10 @@ import graft.core.Dsl
 class RestartSpec extends SparkSpec {
   import spark.implicits._
 
+  private def cached(df: org.apache.spark.sql.DataFrame): Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
+
   private val t0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime
   // 30 s spike seeds variance (an all-steady window is stddev-0-gated);
   // it is never judged itself (trigger 1 has no snapshot yet)
@@ -144,9 +148,20 @@ class RestartSpec extends SparkSpec {
     val grown = disc.dsl
     assert(grown.forTopic("test-topic").get.fields.map(_.path).toSet == Set("sub.one", "extra"))
 
+    // generation 1 is done: close() drops its cached segments but keeps
+    // the persisted store for the next generation
+    val stored1 = p1.storedEventCount
+    val frames1 = p1.segmentFrames
+    assert(frames1.nonEmpty && frames1.forall(cached))
+    p1.close()
+    p1.close() // idempotent
+    assert(!frames1.exists(cached), "close() left generation-1 segments cached")
+    assert(p1.storedEventCount == 0L)
+
     // generation 2 from the grown DSL, same state: sub.one history and
     // cooldown survive; 150 s spike suppressed (30 s after last emit)
     val p2 = new AnomalyPipeline(spark, grown, cooldownMs = 120000L, stateDir = Some(dir))
+    assert(p2.storedEventCount == stored1, "close() lost persisted store rows")
     val out2 = p2.processBatch(msgs(120, 180).toDF("topic", "key", "value", "ts"), new Timestamp(t0 + 180000)).collect()
     assert(!out2.exists(_.path == "sub.one"), s"cooldown lost across DSL growth: ${out2.toSeq}")
     // extra has no pre-growth history -> cannot alarm on its first window
@@ -158,6 +173,39 @@ class RestartSpec extends SparkSpec {
     val out3 = p2.processBatch(msgs(180, 240).toDF("topic", "key", "value", "ts"), new Timestamp(t0 + 240000)).collect()
     assert(out3.exists(e => e.path == "sub.one" && e.produced_us == (t0 + 210000) * 1000L),
       s"grown pipeline lost detection: ${out3.toSeq}")
+  }
+
+  test("an unreadable segment file is skipped on restore; the other segments restore") {
+    val dir = Files.createTempDirectory("graft_state_t").toFile.getAbsolutePath
+    val dsl = Dsl.parse(Map("test-topic" -> Map("sub.one" -> Seq("5m"))))
+    val p1 = new AnomalyPipeline(spark, dsl, cooldownMs = 120000L, stateDir = Some(dir))
+    (0 until 3).foreach { tr =>
+      p1.processBatch(script(tr * 60L, (tr + 1) * 60L).toDF("topic", "key", "value", "ts"),
+        new Timestamp(t0 + (tr + 1) * 60000L))
+    }
+    val stored1 = p1.storedEventCount
+    assert(p1.segmentCount == 3)
+    p1.close()
+    // truncate one part file of the newest manifest-listed segment
+    val listed = scala.io.Source.fromFile(s"$dir/store/_MANIFEST").getLines().filter(_.nonEmpty).toSeq
+    assert(listed.size == 3)
+    val victim = new java.io.File(s"$dir/store/${listed.maxBy(_.split('_')(1).toLong)}")
+    val victimRows = spark.read.parquet(victim.getPath).count()
+    val part = victim.listFiles().filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .maxBy(_.length())
+    val bytes = Files.readAllBytes(part.toPath)
+    Files.write(part.toPath, java.util.Arrays.copyOf(bytes, bytes.length / 2))
+    // drop the local-filesystem checksum, so the read fails on the
+    // truncated parquet itself rather than on a checksum mismatch
+    Files.deleteIfExists(new java.io.File(victim, s".${part.getName}.crc").toPath)
+
+    val p2 = new AnomalyPipeline(spark, dsl, cooldownMs = 120000L, stateDir = Some(dir))
+    assert(p2.segmentCount == 2, "the readable segments must still restore")
+    assert(p2.storedEventCount == stored1 - victimRows)
+    // the restored pipeline keeps working on the surviving store
+    p2.processBatch(script(180, 240).toDF("topic", "key", "value", "ts"), new Timestamp(t0 + 240000))
+    assert(p2.segmentCount == 3)
+    p2.close()
   }
 
   test("segment compaction preserves store contents and the persisted layout") {

@@ -81,6 +81,13 @@ class StatusServerSpec extends SparkSpec {
       val (cm, metrics) = send(port, "/metrics")
       assert(cm == 200 && metrics.contains("graft_analysed_messages_total 7"))
       assert(metrics.contains(s"graft_stored_events ${pipeline.storedEventCount}"))
+      // state gauges: live segments (one per trigger inside the 5m
+      // retention) and block-manager storage in use (segments are cached)
+      assert(pipeline.segmentCount == 2)
+      assert(metrics.contains("# TYPE graft_store_segments gauge\ngraft_store_segments 2\n"))
+      val storage = "(?m)^graft_storage_memory_bytes (\\d+)$".r.findFirstMatchIn(metrics)
+      assert(metrics.contains("# TYPE graft_storage_memory_bytes gauge"))
+      assert(storage.exists(_.group(1).toLong > 0L), s"no storage gauge in: $metrics")
       // unknown path 404s; wrong method 405s
       assert(send(port, "/nope")._1 == 404)
       assert(send(port, "/status", "POST")._1 == 405)

@@ -2,12 +2,29 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.core.Dsl
 import graft.operators.Cooldown
+
+/** Every physical node reachable from a plan: through adaptive plans,
+  * their query stages, and the cached plans of in-memory relations,
+  * recursively.
+  */
+object SegmentPlans {
+  def nodes(plan: SparkPlan): Seq[SparkPlan] = plan.collect { case n => n }.flatMap {
+    case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
+    case s: QueryStageExec => s +: nodes(s.plan)
+    case m: InMemoryTableScanExec => m +: nodes(m.relation.cacheBuilder.cachedPlan)
+    case n => Seq(n)
+  }
+}
 
 /** End-to-end streaming semantics: replays the reference example
   * generator script (example/produceExampleMessages.js — steady
@@ -115,18 +132,49 @@ class AnomalyPipelineSpec extends SparkSpec {
     val few = Dsl.parse(Map("a" -> Map("v" -> Seq("5m"))))
     val many = Dsl.parse(manyTopics)
     val batch = Seq(("topic1", "k", """{"v":1.5}""", new Timestamp(t0))).toDF("topic", "key", "value", "ts")
-    def planNodes(dsl: Dsl): Int =
+    def extraction(dsl: Dsl) =
       graft.operators.Extraction.fromJsonMessagesMulti(
         batch, col("topic"), col("value"), col("ts"),
         dsl.topics.map(tc => tc.topic -> tc.fields.map(_.path)),
         includeFrequency = true,
-      ).queryExecution.optimizedPlan.collect { case p => p }.size
+      )
+    def planNodes(dsl: Dsl): Int = extraction(dsl).queryExecution.optimizedPlan.collect { case p => p }.size
     assert(planNodes(many) == planNodes(few),
       "extraction plan node count must not grow with topic count")
+    // the topic -> paths lookup is in-row: no join, and no broadcast
+    // (a broadcast hash relation stays reachable from every cached
+    // segment built over the extraction)
+    val ex = extraction(many)
+    assert(ex.count() == 2L)
+    val executed = SegmentPlans.nodes(ex.queryExecution.executedPlan)
+    assert(executed.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }.isEmpty,
+      s"extraction must not join: ${ex.queryExecution.executedPlan}")
+    assert(executed.collect { case b: BroadcastExchangeExec => b }.isEmpty,
+      s"extraction must not broadcast: ${ex.queryExecution.executedPlan}")
     // and the 100-topic pipeline actually runs
     val p = new AnomalyPipeline(spark, many, cooldownMs = 0L)
     p.processBatch(batch, new Timestamp(t0 + 1000))
     assert(p.currentStore.count() == 2L) // v sample + __topic_frequency
+  }
+
+  test("cached store segments pin no broadcast relation") {
+    // each trigger caches its segment over the persisted extraction; the
+    // segment's cached plan keeps every node below it reachable (also
+    // after the extraction is unpersisted), so a broadcast exchange there
+    // would pin its hash relation for the segment's whole retention
+    val dsl = Dsl.parse((1 to 20).map(i => s"topic$i" -> Map("sub.one" -> Seq("5m"), "two" -> Seq("5m"))).toMap)
+    val p = new AnomalyPipeline(spark, dsl, cooldownMs = 0L)
+    (0 until 3).foreach { tr =>
+      val msgs = generatorScript(tr * 60L, (tr + 1) * 60L)
+        .flatMap { case (_, k, v, ts) => Seq(("topic1", k, v, ts), ("topic7", k, v, ts)) }
+      p.processBatch(msgs.toDF("topic", "key", "value", "ts"), new Timestamp(t0 + (tr + 1) * 60000L))
+    }
+    val plans = SegmentPlans.nodes(p.currentStore.queryExecution.executedPlan)
+    val cached = plans.collect { case m: InMemoryTableScanExec => m }
+    assert(cached.size >= 3, s"expected the 3 segments' cached relations, got ${cached.size}")
+    val pinned = plans.collect { case b: BroadcastExchangeExec => b }
+    assert(pinned.isEmpty, s"cached segment plans reach ${pinned.size} broadcast exchange(s)")
+    p.close()
   }
 
   test("empty batches and empty DSLs are harmless (no crash, no emission)") {
