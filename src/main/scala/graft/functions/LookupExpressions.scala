@@ -25,6 +25,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * one hash lookup per message, generated code and plan size
   * independent of topic count, nothing materialized per trigger.
   * Returned arrays are shared, read-only values.
+  *
+  * Measured against the `typedLit(table).getItem(topic)` form on the
+  * same extraction (1M messages, 2 fields per topic, local[4] on a
+  * 4-core host, median of 5 alternating runs): equal at 10 topics,
+  * the literal 1.09x slower at 100, 1.26x at 1,000 and 3.5x at 10,000
+  * topics, field discovery's default per-scan topic cap.
   */
 case class TopicFields(child: Expression, table: Map[String, Seq[(String, String)]])
     extends UnaryExpression {

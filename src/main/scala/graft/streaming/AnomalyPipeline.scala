@@ -99,6 +99,17 @@ class AnomalyPipeline(
     */
   private[streaming] val pendingTruncate = new java.util.concurrent.atomic.AtomicBoolean(false)
 
+  /** Set by [[close]]. A closed pipeline holds none of the persisted
+    * store in memory, so it must never write the manifest again: that
+    * would list only its own new segment and turn every segment dir
+    * persisted before the close into an orphan that the next restore
+    * deletes.
+    */
+  private val closed = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  private def requireOpen(): Unit =
+    if (closed.get()) throw new IllegalStateException("AnomalyPipeline is closed")
+
   /** Build a segment from a (persisted or checkpointed) chunk, reading
     * its max event time and row count (which materializes the cache;
     * the cached count also makes storedEventCount a driver-side sum
@@ -360,10 +371,6 @@ class AnomalyPipeline(
     */
   def segmentCount: Int = storeLock.synchronized(segments.get().size)
 
-  /** The live segments' frames, for inspecting what they keep cached. */
-  private[streaming] def segmentFrames: Vector[DataFrame] =
-    storeLock.synchronized(segments.get().map(_.df))
-
   /** Stats-cache read-back, one row per (topic, path, window) with the
     * reference's {median, stdDev} value shape (the DSLHandler cache,
     * lib/dsl/DSLHandler.js:264-267). The snapshot is tiny
@@ -391,6 +398,7 @@ class AnomalyPipeline(
     * the reference (truncate does not reset anomaly suppression).
     */
   def truncate(): Unit = storeLock.synchronized {
+    requireOpen()
     truncateEpoch.incrementAndGet()
     snapshot.set(None)
     bucketState.set(None)
@@ -413,10 +421,13 @@ class AnomalyPipeline(
     * stopped: the cached store segments, the stats snapshot and the
     * bucket partials. The persisted `stateDir` (segment directories,
     * manifest, cooldown) is left as it is, so a later pipeline on the
-    * same `stateDir` restores the same store. Idempotent; the pipeline
-    * must not process batches afterwards.
+    * same `stateDir` restores the same store. Idempotent. Afterwards
+    * [[processBatch]] and [[truncate]] throw `IllegalStateException`,
+    * and a trigger still in flight publishes nothing, so the manifest
+    * is never rewritten by a closed pipeline.
     */
   def close(): Unit = storeLock.synchronized {
+    closed.set(true)
     segments.getAndSet(Vector.empty).foreach(_.uncache())
     snapshot.getAndSet(None).foreach(AnomalyPipeline.uncache)
     bucketState.getAndSet(None).foreach(AnomalyPipeline.uncache)
@@ -434,6 +445,7 @@ class AnomalyPipeline(
     // epoch; store/snapshot publishes below re-check it so a truncate
     // landing mid-trigger is never overwritten by pre-truncate state.
     val epoch0 = storeLock.synchronized {
+      requireOpen()
       if (pendingTruncate.getAndSet(false)) {
         segments.get().foreach(_.release())
         segments.set(Vector.empty)
@@ -448,6 +460,9 @@ class AnomalyPipeline(
   private def processBatchInner(
       batch: DataFrame, now: java.sql.Timestamp, epoch0: Long,
   ): Dataset[CooldownState.AnomalyEvent] = {
+    // false once a truncate or a close lands mid-trigger: this trigger
+    // then publishes nothing
+    def publishing: Boolean = truncateEpoch.get() == epoch0 && !closed.get()
     counters.analysedMessages.add(batch.count())
 
     // 1. single-pass long-format projection: one plan regardless of
@@ -523,9 +538,11 @@ class AnomalyPipeline(
       case _ => seg0
     }
     storeLock.synchronized {
-      if (truncateEpoch.get() != epoch0) {
+      if (!publishing) {
         // a truncate landed mid-trigger: this batch's segment is
-        // pre-truncate data — drop it instead of publishing it
+        // pre-truncate data — drop it instead of publishing it. Same
+        // after a close: the manifest must keep the segments it lists
+        // (this segment's dir is not listed, so deleting it is safe)
         seg.release()
       } else {
         val (keep, expired) = (segments.get() :+ seg).partition(_.maxTsUs >= segHorizonUs)
@@ -567,20 +584,20 @@ class AnomalyPipeline(
     // (on restart the restart branch above has already rebuilt the
     // compacted partials from the restored store, so the fold below
     // never loses pre-restart history)
-    if (truncateEpoch.get() == epoch0) statsBucketSec.foreach { b =>
+    if (publishing) statsBucketSec.foreach { b =>
       val folded = foldBuckets(WindowStats.bucketPartials(seg.df, b), horizonUs, b)
       storeLock.synchronized {
-        if (truncateEpoch.get() == epoch0) bucketState.set(Some(folded))
+        if (publishing) bucketState.set(Some(folded))
       }
     }
     // 4. recompute the snapshot for the NEXT trigger (bucketed mode:
     // merge of cached per-segment partials, no raw re-scan)
     val windows = dsl.topics.flatMap(_.fields.flatMap(_.windows)).distinct
-    if (windows.nonEmpty && truncateEpoch.get() == epoch0) {
+    if (windows.nonEmpty && publishing) {
       val stats = computeStats(windows, now, horizonUs)
         .localCheckpoint(eager = true)
       storeLock.synchronized {
-        if (truncateEpoch.get() == epoch0) snapshot.set(Some(stats))
+        if (publishing) snapshot.set(Some(stats))
       }
     }
     counters.scanRuns.add(1)

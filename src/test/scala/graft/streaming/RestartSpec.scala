@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -20,9 +21,17 @@ import graft.core.Dsl
 class RestartSpec extends SparkSpec {
   import spark.implicits._
 
-  private def cached(df: org.apache.spark.sql.DataFrame): Boolean =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
-      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
+  /** The cached relations the pipeline's store reads: one per live
+    * segment.
+    */
+  private def storeRelations(p: AnomalyPipeline): Seq[InMemoryRelation] =
+    p.currentStore.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
+
+  /** Whether a relation is still registered with the cache manager. */
+  private def registered(r: InMemoryRelation): Boolean = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    session.sharedState.cacheManager.lookupCachedData(session, r.cacheBuilder.logicalPlan).isDefined
+  }
 
   private val t0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime
   // 30 s spike seeds variance (an all-steady window is stddev-0-gated);
@@ -151,12 +160,22 @@ class RestartSpec extends SparkSpec {
     // generation 1 is done: close() drops its cached segments but keeps
     // the persisted store for the next generation
     val stored1 = p1.storedEventCount
-    val frames1 = p1.segmentFrames
-    assert(frames1.nonEmpty && frames1.forall(cached))
+    val rels1 = storeRelations(p1)
+    assert(rels1.size == p1.segmentCount && rels1.forall(registered))
+    val manifest = java.nio.file.Paths.get(s"$dir/store/_MANIFEST")
+    val listed = Files.readAllLines(manifest)
     p1.close()
     p1.close() // idempotent
-    assert(!frames1.exists(cached), "close() left generation-1 segments cached")
+    assert(!rels1.exists(registered), "close() left generation-1 segments cached")
+    assert(!rels1.exists(_.cacheBuilder.isCachedColumnBuffersLoaded))
     assert(p1.storedEventCount == 0L)
+    // a trigger after close would commit a manifest naming only its own
+    // segment, and the next restore would delete the others as orphans
+    intercept[IllegalStateException] {
+      p1.processBatch(msgs(120, 180).toDF("topic", "key", "value", "ts"), new Timestamp(t0 + 180000))
+    }
+    intercept[IllegalStateException](p1.truncate())
+    assert(Files.readAllLines(manifest) == listed)
 
     // generation 2 from the grown DSL, same state: sub.one history and
     // cooldown survive; 150 s spike suppressed (30 s after last emit)
